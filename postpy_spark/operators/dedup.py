@@ -628,9 +628,13 @@ def _make_simhash_worker():
                     [batch.schema.names[0], "simhash"],
                 )
                 continue
-            # offsets index into .values (NOT .flatten(), which re-bases)
+            # offsets index into .values (NOT .flatten(), which re-bases).
+            # On a sliced batch .values is the whole parent buffer, so trim
+            # it at the slice's last offset or the final reduceat segment
+            # would run on into the rows past the slice.
             off = hs.offsets.to_numpy().astype(np.int64)
-            flat = hs.values.to_numpy(zero_copy_only=False).astype(np.int64)
+            flat = hs.values.slice(0, int(off[-1]))
+            flat = flat.to_numpy(zero_copy_only=False).astype(np.int64)
             counts = np.diff(off)
             if (counts <= 0).any():
                 # callers filter size>0; np.add.reduceat is wrong on
@@ -1055,10 +1059,10 @@ def dup_positions(g: DataFrame, pre_aggregate: bool = False) -> DataFrame:
     re-exploded from the packed lists; pinned by
     tests/test_llm_ops.py::test_dup_positions_preagg_identical and the
     family oracles).  GUARDED rather than default because on healthy
-    corpora the packed aggregate measured +14/+29% on the per-doc span
-    queries at sf0.1 (interleaved A/B, OPTIMIZATION_r15.md) — enable it
-    for corpora where single documents repeat a gram at straggler scale;
-    the 16x mega-gram soak row records both paths."""
+    corpora the packed aggregate is slower, by +4…+29% (VERDICT.md,
+    round 15 review) — enable it for corpora where
+    single documents repeat a gram at straggler scale.  No committed soak
+    row measures it at the mega-gram scale it exists for yet."""
     wg = Window.partitionBy("gram")
     if not pre_aggregate:
         return (

@@ -230,10 +230,9 @@ def _passjoin_probe(values: DataFrame, str_col: str, d: int) -> DataFrame:
     (delta, i, shift), same arithmetic (float-divide floor segment bounds),
     same CASE-WHEN-null shape, same let-bound filter/distinct HOFs.
 
-    (r15 measured-and-rejected: memoizing the parsed Column per session
-    saved nothing — a warm re-parse is ~30 ms; the residual 0.3 s/build is
-    the surrounding DataFrame-DSL Py4J calls, which are not memoizable.
-    Numbers in OPTIMIZATION_r15.md.)"""
+    (Tried and rejected in r15: memoizing the parsed Column per session.
+    The build time that remains is in the surrounding DataFrame-DSL Py4J
+    calls, which are not memoizable.)"""
     k = d + 1
     c = f"`{str_col}`"
     L = f"length({c})"

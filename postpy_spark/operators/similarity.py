@@ -1,9 +1,19 @@
 """Similarity search over embedding columns (SURVEY.md §2.D).
 
-Brute-force cosine top-k as the exact baseline, and a random-hyperplane
-LSH-bucketed approximate path for scale.  All vector math is JVM-side
-higher-order functions (``zip_with`` + ``aggregate``) — no Python UDF in
-any hot path.
+Brute-force cosine top-k as the exact baseline, and random-hyperplane LSH,
+IVF and kNN-graph paths for scale.  Scalar vector math in the exact paths
+is JVM-side higher-order functions (``zip_with`` + ``aggregate``).  The
+per-row kernels of the scale paths run as Arrow Python workers, each an
+explicit left fold over dimensions so its dots are bit-identical to the
+JVM fold:
+
+- :func:`_make_signature_worker` — LSH band signatures (``mapInArrow``);
+- :func:`_make_pair_dot_worker` — one dot per candidate pair
+  (``mapInArrow``; NN-descent rescoring);
+- :func:`_make_assign_worker` — nearest-centroid argmax (``mapInArrow``;
+  IVF build/refine, semantic dedup);
+- :func:`_make_bucket_topk_worker` — one LSH bucket's dot matrix with an
+  in-bucket top-k prune (``applyInArrow``; the kNN graph).
 
 Scale design: brute force is a broadcast-nested-loop against a SMALL query
 set (queries broadcast, corpus streamed — linear in corpus size); the LSH
@@ -17,7 +27,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 
 def dot_expr(a, b):
@@ -113,7 +123,7 @@ def dot_scored_pairs(
     pairs: DataFrame, vecs: DataFrame, round_dp: int | None = 6
 ) -> DataFrame:
     """(src, dst) id pairs + (id, v) unit vectors → (src, dst, cosine):
-    the single exact-scoring pass of the kNN-graph family.
+    the single exact-scoring pass of :func:`nndescent_round`.
 
     Vectors join back onto the (deduped) pair set exactly once — both
     joins broadcast the corpus-sized vector frame — and the per-pair dot
@@ -122,8 +132,6 @@ def dot_scored_pairs(
     1.16M-pair sf0.1 scored stage, bit-identical output (see
     :func:`_make_pair_dot_worker`).  Rounding stays JVM-side so HALF_UP
     semantics are untouched."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
     joined = (
         pairs.join(vecs.select(F.col("id").alias("src"), F.col("v").alias("sv")), "src")
         .join(vecs.select(F.col("id").alias("dst"), F.col("v").alias("dv")), "dst")
@@ -706,19 +714,6 @@ def semantic_dedup(
         # planted-dense-cluster pathology.  16 floor keeps tiny corpora on
         # the historical golden-fixture path.
         n_cells = max(16, min(4096, corpus.count() // 512))
-    # arrow=False (r14 optimization round 3, measured): semantic_dedup's
-    # final query references the assignment from SEVERAL branches (both
-    # self-join sides + the final left join) plus broadcast-build jobs.
-    # The Arrow assignment is faster in isolation (0.53 vs 0.93 s warm),
-    # but here each branch re-entered a Python stage where the all-JVM
-    # subtree was cheap to recompute concurrently, the narrow worker
-    # inherited the scan's single-file partitioning (the within-cell
-    # cosine stage collapsed onto ONE task — pair join alone 4.5 s vs
-    # 1.5 s under the max_by output's hash partitioning), and the collect
-    # /checkpoint sequencing jobs added ~3 job floors.  Every repair
-    # combination still measured +22–88% interleaved, so this
-    # multi-consumer pipeline keeps the JVM max_by shape; the
-    # single-consumer IVF/PQ/kmeans paths keep Arrow (−6/−18/−33%).
     centroids, assigned = ivf_build(
         corpus, n_cells, id_col, vec_col, seed, arrow=True
     )
@@ -871,8 +866,86 @@ def _make_mmr_greedy(k: int, lam: float):
 
 
 # ---------------------------------------------------------------------------
-# Approximate k-NN GRAPH (all-vectors top-k, LSH-blocked self-join)
+# Approximate k-NN GRAPH (all-vectors top-k, LSH-blocked)
 # ---------------------------------------------------------------------------
+
+
+def _make_bucket_topk_worker(k: int):
+    """Factory for the Arrow per-bucket scoring worker of :func:`knn_graph`
+    (factory-nested — pickle-by-value landmine; pinned by
+    tests/test_pickle_isolation.py).
+
+    Input: one LSH bucket (``applyInArrow`` group) as a table with ``id``
+    and the unit vector ``v``.  The bucket's s×s dot matrix is the same
+    EXPLICIT LEFT FOLD over dimensions as :func:`_make_pair_dot_worker`
+    (each entry takes one single-rounding multiply + add per dimension,
+    in index order), so every entry is bit-identical to that worker's —
+    and the JVM ``dot_expr`` fold's — dot for the same pair (IEEE
+    multiplication commutes, so the matrix is symmetric).
+
+    Emits (src, dst, dot) for every member ``src`` and every other member
+    ``dst`` whose raw dot is at least src's k-th best raw dot in the
+    bucket minus 2e-6 (all of them when the bucket holds ≤ k others);
+    self-pairs never.  The margin keeps the pruning exact under the
+    caller's ``round(dot, 6)``: HALF_UP rounding is monotone and moves a
+    value by at most 5e-7, so a pruned candidate is STRICTLY beaten after
+    rounding by k bucket-mates of the same src and cannot reach src's
+    top-k.  NaN dots count as the largest value (Spark orders NaN above
+    every number under DESC), so NaN candidates are always kept."""
+
+    def score_bucket(table):
+        import numpy as np
+        import pyarrow as pa
+
+        ids, vec = table.column("id"), table.column("v")
+        s = table.num_rows
+        names = ["src", "dst", "dot"]
+        if vec.null_count:
+            # the inner join against the vector frame guarantees non-null
+            # payloads; raise loudly rather than misalign the flat buffer
+            raise ValueError("bucket scorer received a null vector")
+        if s < 2:
+            return pa.table(
+                [ids.slice(0, 0), ids.slice(0, 0), pa.array([], type=pa.float64())],
+                names=names,
+            )
+        # list<double> -> flat buffer -> (s, d); reshape raises on ragged rows
+        x = vec.combine_chunks().flatten().to_numpy(zero_copy_only=False)
+        xt = np.ascontiguousarray(x.reshape(s, -1).T)  # (d, s)
+        acc = np.empty((s, s), dtype=np.float64)
+        # Fold the upper triangle in cache-sized row blocks and mirror it:
+        # acc is symmetric bit for bit, so this is the same fold with half
+        # the work and each block's accumulator staying in cache.
+        for r0 in range(0, s, 64):
+            r1 = min(s, r0 + 64)
+            blk = np.zeros((r1 - r0, s - r0), dtype=np.float64)
+            term = np.empty_like(blk)
+            for j in range(xt.shape[0]):
+                np.multiply(xt[j, r0:r1, None], xt[j, None, r0:], out=term)
+                blk += term
+            acc[r0:r1, r0:] = blk
+            acc[r0:, r0:r1] = blk.T
+        key = np.where(np.isnan(acc), np.inf, acc)
+        np.fill_diagonal(key, -np.inf)
+        if s - 1 > k:
+            # k-th largest candidate key per row (the -inf diagonal is the
+            # smallest entry, so it never displaces a real candidate)
+            kth = -np.partition(-key, k - 1, axis=1)[:, k - 1]
+            keep = key >= (kth - 2e-6)[:, None]
+        else:
+            keep = np.ones((s, s), dtype=bool)
+        np.fill_diagonal(keep, False)
+        src, dst = np.nonzero(keep)
+        return pa.table(
+            [
+                ids.take(pa.array(src)),
+                ids.take(pa.array(dst)),
+                pa.array(acc[src, dst], type=pa.float64()),
+            ],
+            names=names,
+        )
+
+    return score_bucket
 
 
 def knn_graph(
@@ -890,16 +963,32 @@ def knn_graph(
     every corpus vector gets its top-k neighbors, the substrate for
     graph-based dedup/clustering (kNN + connected components ≈ density
     clustering).  Unlike ann_lsh_topk there is no broadcastable query
-    side: candidates come from a bucket EQUI-self-join per band (2-bit
-    bands like ann_lsh_topk — wide enough for recall on clustered
-    data), hot buckets salt-split so one dense bucket cannot go
-    quadratic (same policy as the MinHash path's _cap_hot_buckets).
-    The salt is hash(id, band_id) — INDEPENDENT per band — so a pair
-    split apart in one band can still collide in another; with B
-    always-hot bands the residual loss is (1-1/s)^B, not
-    (1-1/s).  Pairs dedup across
-    bands before the ONE exact-cosine scoring pass; per-src top-k is a
-    window over candidate lists, never the corpus.
+    side: candidates are a vector's LSH bucket-mates in any band (2-bit
+    bands like ann_lsh_topk — wide enough for recall on clustered data),
+    hot buckets salt-split so one dense bucket cannot go quadratic (same
+    policy as the MinHash path's _cap_hot_buckets).  The salt is
+    hash(id, band_id) — INDEPENDENT per band — so a pair split apart in
+    one band can still collide in another; with B always-hot bands the
+    residual loss is (1-1/s)^B, not (1-1/s).
+
+    Block scoring: the unit vectors join onto the salted bucket members
+    ONCE, and each (band, bucket, salt) block is scored by one Arrow
+    worker (:func:`_make_bucket_topk_worker`) — the bucket's s×s dot
+    matrix as the bit-identical left fold, then an in-bucket top-k
+    prune, the REPOSE-style local top-k before the global merge.  Memory
+    per group is ~max_bucket² doubles, since the salt caps bucket size.
+    The JVM then dedups (src, dst) across bands, rounds the dot to 6 dp
+    and keeps the per-src top-k in a (cosine desc, dst) window.
+
+    Why the prune is exact (the same rows as scoring every candidate
+    pair):
+
+    - a global top-k neighbor of src is in src's in-bucket top-k of
+      every bucket they share — a bucket only has fewer competitors;
+    - the worker keeps everything within 2e-6 of src's k-th best raw
+      dot, and HALF_UP rounding is monotone and moves a value by at most
+      5e-7, so anything pruned is strictly beaten after rounding by k
+      candidates of the same src.
 
     Zero-vector convention: a zero embedding passes through ``unit_col``
     unchanged, so every pair involving it scores ``cosine = 0.0`` and it
@@ -909,27 +998,10 @@ def knn_graph(
     and NULL cosines would sort last anyway under DESC NULLS LAST while
     silently dropping the node's own neighbor list in strict consumers."""
     planes = _hyperplanes(dim, n_bits, seed)
-    # Signatures carry ONLY (id, band_id, band_val): the candidate self-join
-    # and the cross-band pair dedup shuffle 16-byte id pairs, not the
-    # d-float payload (~60x fewer shuffle bytes per pair at dim=64).
-    # Vectors join back exactly once, onto the already-deduped pair set,
-    # for the single exact-cosine scoring pass.
-    # materialize the signature frame ONCE (r14 optimization, round 2 cut):
-    # the hyperplane pipeline (16 HOF dots per vector) is the expensive part
-    # and is referenced by the sizing aggregate AND (through the salt join)
-    # both self-join sides — Spark has no cross-branch subplan CSE.
-    # Checkpointing BEFORE the sizing/salt join beats checkpointing the
-    # salted output (the r14 first cut): the salt join's inputs both derive
-    # from the checkpointed rows, so re-planning it per branch costs only a
-    # bucket-count aggregate over n_vectors x bands small ints, while the
-    # old shape evaluated the full HOF pipeline twice (sizing + join) just
-    # to build the frame being checkpointed.  Measured 6.4 s -> 4.4 s warm
-    # for the full seed at sf0.1, rows identical (exceptAll 0/0).
-    # The signature pipeline itself is ONE Arrow batch pass (r14
-    # optimization round 3, guide §4.2): the Column-DSL form ran n_bits=16
-    # interpreted HOF dot folds per vector; the worker left-folds the
-    # projections batch-wise — band values bit-identical (pinned by
-    # tests/test_llm_ops.py::test_arrow_signatures_identical_to_hof).
+    # The signature frame is materialized ONCE: it feeds both the bucket
+    # sizing aggregate and the salt join, and Spark has no cross-branch
+    # subplan CSE.  The signatures themselves are one Arrow batch pass
+    # (bit-identical to the HOF form; see _make_signature_worker).
     sig = lsh_signatures_exploded(
         corpus, planes, bands, id_col=id_col, vec_col=vec_col
     ).localCheckpoint()
@@ -944,25 +1016,31 @@ def knn_graph(
             ),
         ).otherwise(F.lit(0)),
     )
-    a = salted.select("band_id", "band_val", "salt", F.col("id").alias("src"))
-    b = salted.select("band_id", "band_val", "salt", F.col("id").alias("dst"))
-    pairs = (
-        a.join(b, ["band_id", "band_val", "salt"])
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .dropDuplicates(["src", "dst"])
-    )
-    # Normalize ONCE per corpus row; the pair set is orders of magnitude
-    # larger than the corpus, so paying one unit_col fold per vector buys
-    # a 3× cheaper per-pair score (a 64-op dot instead of the 192-op
-    # dot + two norms that cosine_expr would interpret per pair).
+    # Normalize ONCE per corpus row, JVM-side (the unit_col bits the dot
+    # fold has always consumed), so a dot is a 64-op fold with no norms.
     vecs = corpus.select(
         F.col(id_col).alias("id"), unit_col(F.col(vec_col)).alias("v")
     )
-    undirected = both_directions(dot_scored_pairs(pairs, vecs))
+    members = salted.select("band_id", "band_val", "salt", "id").join(vecs, "id")
+    out_schema = StructType(
+        [
+            StructField("src", members.schema["id"].dataType),
+            StructField("dst", members.schema["id"].dataType),
+            StructField("dot", DoubleType()),
+        ]
+    )
+    scored = (
+        members.groupBy("band_id", "band_val", "salt")
+        .applyInArrow(_make_bucket_topk_worker(k), out_schema)
+        # one exchange on src serves both the cross-band dedup (clustered
+        # on (src, dst)) and the per-src window
+        .repartition("src")
+        .dropDuplicates(["src", "dst"])
+        .select("src", "dst", F.round(F.col("dot"), 6).alias("cosine"))
+    )
     w = Window.partitionBy("src").orderBy(F.col("cosine").desc(), F.col("dst"))
     return (
-        undirected.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)
     )
 
@@ -999,8 +1077,8 @@ def nndescent_round(
     cosine (dst tie-break) in a per-node window, bounding candidate
     volume at (2k)² id-pairs per node.  The two-hop join and the pair
     dedup shuffle 16-byte id pairs only; vectors join back ONCE onto the
-    deduped candidate set (same discipline as knn_graph); top-k is a
-    per-src window over candidate lists, never the corpus."""
+    deduped candidate set (:func:`dot_scored_pairs`); top-k is a per-src
+    window over candidate lists, never the corpus."""
     edges = graph.select("src", "dst", "cosine")
     w_rev = Window.partitionBy("src").orderBy(
         F.col("cosine").desc(), F.col("dst")

@@ -2765,11 +2765,17 @@ def dedup_eval_planted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_knn_graph_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate k-NN GRAPH over the embedding corpus
     (operators/similarity.py::knn_graph): every vector's top-5 cosine
-    neighbors via LSH-bucketed self-join (8-bit bands, salt-capped hot
-    buckets) — the substrate for graph-based clustering and
-    density-aware dedup.  Rows-only (hyperplane-seed dependent); pytest
-    pins recall ≥0.9 vs the exact brute-force graph and the no-self-edge
-    / rank-contract invariants."""
+    neighbors among its LSH bucket-mates (8 bands of 2 bits, salt-capped
+    hot buckets) — the substrate for graph-based clustering and
+    density-aware dedup.  Each bucket is scored as one Arrow block (its
+    dot matrix, bit-identical to the per-pair fold) and pruned to each
+    member's in-bucket top-k within a 2e-6 margin — exact, because a
+    global top-k neighbor is in the in-bucket top-k of every bucket it
+    shares with its src, and 6-dp HALF_UP rounding moves a dot by at
+    most 5e-7.  Rows-only (hyperplane-seed dependent); pytest pins
+    recall ≥0.9 vs the exact brute-force graph, the no-self-edge /
+    rank-contract invariants and row identity with the all-pairs
+    scoring shape."""
     from postpy_spark.operators.similarity import knn_graph
 
     return knn_graph(load_table(spark, sf_dir, "embeddings"), k=5)
@@ -3534,8 +3540,8 @@ def sim_ivfpq_planted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_knn_graph_planted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT-oracle attestation of the k-NN GRAPH pipeline (LSH band
-    signatures → bucket self-join → cross-band pair dedup → one exact
-    cosine pass → per-src top-k window): sim_knn_graph is rows-only
+    signatures → per-bucket Arrow block scoring with in-bucket top-k →
+    cross-band edge dedup → per-src top-k window): sim_knn_graph is rows-only
     (edge-recall-gated ≥0.9), but on the planted one-hot geometry the
     graph is a closed form:
 
@@ -3546,12 +3552,15 @@ def sim_knn_graph_planted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       structurally unreachable);
     - cross-group band collisions DO occur (2-bit buckets) but score
       exactly 0.0 and each node's 5 co-duplicates (cosine exactly 1.0)
-      fill all k=5 ranks ahead of them, ordered by the dst tie-break.
+      fill all k=5 ranks ahead of them, ordered by the dst tie-break;
+      the in-bucket prune keeps every 1.0 mate, since all of a node's
+      co-duplicates share each of its buckets.
 
     Every node appears with exactly its 5 co-group edges; every
     (src, dst, cosine, rank) value is hash-compared.  Scale: identical
-    plan to the production path — id-only pair shuffles, vectors joined
-    back once, salt caps armed (provably not engaged)."""
+    plan to the production path — vectors joined onto bucket members
+    once, one Arrow block per bucket, salt caps armed (provably not
+    engaged)."""
     from postpy_spark.operators.similarity import knn_graph
 
     return knn_graph(_planted_onehot_corpus(spark, sf_dir), k=5).select(

@@ -1396,6 +1396,80 @@ def test_arrow_pair_dot_bit_identical_to_hof_fold(spark):
     assert mismatches == 0
 
 
+def _knn_graph_pair_shape(corpus, k=5, max_bucket=256):
+    """The pre-block-scoring knn_graph, built inline: the same signatures
+    and salt, then bucket self-join → cross-band dropDuplicates →
+    dot_scored_pairs → both_directions → per-src (cosine desc, dst)
+    window over EVERY candidate pair."""
+    from pyspark.sql import Window
+
+    from postpy_spark.operators.similarity import (
+        _hyperplanes,
+        both_directions,
+        dot_scored_pairs,
+        lsh_signatures_exploded,
+        unit_col,
+    )
+
+    # knn_graph's defaults: dim=64, n_bits=16, bands=8, seed=42
+    sig = lsh_signatures_exploded(corpus, _hyperplanes(64, 16, 42), 8)
+    sizes = sig.groupBy("band_id", "band_val").agg(F.count(F.lit(1)).alias("_bn"))
+    salted = sig.join(F.broadcast(sizes), ["band_id", "band_val"]).withColumn(
+        "salt",
+        F.when(
+            F.col("_bn") > max_bucket,
+            F.pmod(
+                F.xxhash64(F.col("id"), F.col("band_id")),
+                F.ceil(F.col("_bn") / max_bucket),
+            ),
+        ).otherwise(F.lit(0)),
+    )
+    a = salted.select("band_id", "band_val", "salt", F.col("id").alias("src"))
+    b = salted.select("band_id", "band_val", "salt", F.col("id").alias("dst"))
+    pairs = (
+        a.join(b, ["band_id", "band_val", "salt"])
+        .filter(F.col("src") < F.col("dst"))
+        .select("src", "dst")
+        .dropDuplicates(["src", "dst"])
+    )
+    vecs = corpus.select(
+        F.col("vec_id").alias("id"), unit_col(F.col("embedding")).alias("v")
+    )
+    undirected = both_directions(dot_scored_pairs(pairs, vecs))
+    w = Window.partitionBy("src").orderBy(F.col("cosine").desc(), F.col("dst"))
+    return undirected.withColumn(
+        "rank", F.row_number().over(w).cast("bigint")
+    ).filter(F.col("rank") <= k)
+
+
+@pytest.mark.parametrize(
+    "corpus_name,k,max_bucket",
+    [("smoke", 5, 256), ("smoke", 2, 48), ("planted_onehot", 5, 256)],
+)
+def test_knn_graph_block_scoring_identical_to_pair_shape(
+    spark, corpus_name, k, max_bucket
+):
+    """knn_graph's per-bucket Arrow block scoring with in-bucket top-k
+    pruning must return EXACTLY the rows of the old all-pairs shape
+    (exceptAll both ways, cosine and rank included): on the smoke corpus
+    as is and with max_bucket=48, which salt-splits every bucket, and on
+    the planted one-hot corpus, whose exact 1.0 / 0.0 ties stress the
+    margin and the dst tie-break."""
+    from postpy_spark.operators.similarity import knn_graph
+    from postpy_spark.queries.llm_pipeline import _planted_onehot_corpus
+
+    if corpus_name == "smoke":
+        em = load_table(spark, SF_SMOKE, "embeddings")
+    else:
+        em = _planted_onehot_corpus(spark, SF_SMOKE)
+    cols = ["src", "dst", "cosine", "rank"]
+    got = knn_graph(em, k=k, max_bucket=max_bucket).select(*cols)
+    want = _knn_graph_pair_shape(em, k=k, max_bucket=max_bucket).select(*cols)
+    assert got.count() > 0
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
 def test_dup_positions_preagg_identical(spark):
     """The guarded (gram, doc) pre-aggregate (r15 mega-gram hatch) must be
     row-identical to the default window shape for BOTH the per-doc tier

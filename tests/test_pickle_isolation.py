@@ -236,6 +236,32 @@ def test_pair_dot_worker_pickles_by_value():
     _roundtrip_in_clean_subprocess(_make_pair_dot_worker(), probe)
 
 
+def test_bucket_topk_worker_pickles_by_value():
+    """The kNN-graph bucket scorer ships as an applyInArrow payload
+    (operators/similarity.py::_make_bucket_topk_worker) — factory-nested
+    so it cloudpickles by value; the probe scores a 3-member bucket with
+    k=1 and checks the pruned edges and their dots."""
+    from postpy_spark.operators.similarity import _make_bucket_topk_worker
+
+    def probe(fn):
+        import pyarrow as pa
+
+        table = pa.table(
+            [
+                pa.array([1, 2, 3], type=pa.int64()),
+                pa.array(
+                    [[1.0, 0.0], [0.6, 0.8], [0.0, 1.0]], type=pa.list_(pa.float64())
+                ),
+            ],
+            names=["id", "v"],
+        )
+        out = fn(table)
+        edges = sorted(zip(*(out.column(c).to_pylist() for c in ("src", "dst", "dot"))))
+        assert edges == [(1, 2, 0.6), (2, 3, 0.8), (3, 2, 0.8)], edges
+
+    _roundtrip_in_clean_subprocess(_make_bucket_topk_worker(1), probe)
+
+
 def test_signature_worker_pickles_by_value():
     """The kNN-graph LSH-signature stage ships as a mapInArrow payload
     (operators/similarity.py::_make_signature_worker) closing over the

@@ -23,7 +23,7 @@ sys.path.insert(0, os.getcwd())
 from postpy_spark import registry
 from postpy_spark.session import get_spark
 name, sf_dir = sys.argv[1], sys.argv[2]
-spark = get_spark("ab-query", shuffle_partitions=8)
+spark = get_spark("ab-query")
 spark.sparkContext.setLogLevel("ERROR")
 # r14: no base-table pre-cache — match bench.py's fixed methodology
 # (every timed pass computes from the parquet inputs).

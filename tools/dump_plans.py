@@ -35,7 +35,7 @@ def main() -> None:
         names = list(dict.fromkeys([*bench.HEADLINE, *bench.HEAVY_EXTRAS, *names]))
     os.makedirs(OUT_DIR, exist_ok=True)
     reg = registry.load_all()
-    spark = get_spark("postpy-plan-dump", shuffle_partitions=8)
+    spark = get_spark("postpy-plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
         if name not in reg:
