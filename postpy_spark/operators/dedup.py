@@ -1034,114 +1034,93 @@ def containment_pairs_incremental(
 
 
 # ---------------------------------------------------------------------------
-# Cross-document shared-passage extraction (exact-substring dedup audit)
+# Repeated-span family (exact-substring dedup, Lee et al. 2022,
+# arXiv:2107.06499): token/char grams × per-doc profile/pairwise passages,
+# all four ops built from the shared stages below.
 # ---------------------------------------------------------------------------
 
 
-def dup_positions(g: DataFrame, pre_aggregate: bool = False) -> DataFrame:
+def _char_grams(base: DataFrame, k: int) -> DataFrame:
+    """(doc_id, pos, gram) for every k-char window of ``base``'s raw ``_t``
+    text.  Windows are enumerated by exploding a position sequence and
+    substring-ing from the carried text, so no len*k gram array is ever
+    materialized per doc; docs shorter than k emit nothing."""
+    return (
+        base.filter(F.length("_t") >= k)
+        .select(
+            "doc_id",
+            "_t",
+            F.explode(
+                F.sequence(F.lit(0), F.length("_t") - F.lit(k))
+            ).alias("pos"),
+        )
+        .select(
+            "doc_id",
+            "pos",
+            F.substring(F.col("_t"), F.col("pos") + 1, k).alias("gram"),
+        )
+    )
+
+
+def dup_positions(g: DataFrame) -> DataFrame:
     """(doc_id, pos BIGINT) positions whose gram occurs more than once
     corpus-wide — the shared per-doc-tier core of the repeated-span family
     (token + char + excise).
 
-    Default shape (r14): ONE gram-keyed exchange with a whole-partition
-    count window — the fastest form on healthy corpora, with the
-    documented trade-off that a gram's raw occurrence rows buffer on one
-    window task (the mega-gram straggler risk, r14 queue item 5).
-
-    ``pre_aggregate=True`` is the r15 MEGA-GRAM HATCH (guide §2.5): an
-    explicit gram repartition, then a (gram, doc) pre-aggregate (count +
-    packed position list) ahead of the count window.  hashpartitioning
-    (gram) satisfies every downstream clustering, so the chain still rides
-    ONE corpus-sized exchange; the window's group shrinks to one row per
-    (gram, doc), the sort-aggregate under it spills gracefully, and an
-    intra-doc mega-gram collapses to a single packed row before any
-    windowing.  Rows are identical either way (the (doc, pos) multiset is
-    re-exploded from the packed lists; pinned by
-    tests/test_llm_ops.py::test_dup_positions_preagg_identical and the
-    family oracles).  GUARDED rather than default because on healthy
-    corpora the packed aggregate is slower, by +4…+29% (VERDICT.md,
-    round 15 review) — enable it for corpora where
-    single documents repeat a gram at straggler scale.  No committed soak
-    row measures it at the mega-gram scale it exists for yet."""
-    wg = Window.partitionBy("gram")
-    if not pre_aggregate:
-        return (
-            g.withColumn("_cnt", F.count(F.lit(1)).over(wg))
-            .filter(F.col("_cnt") > 1)
-            .select("doc_id", F.col("pos").cast("bigint").alias("pos"))
-        )
-    pg = (
-        g.repartition(F.col("gram"))
-        .groupBy("gram", "doc_id")
-        .agg(F.count(F.lit(1)).alias("_c"), F.collect_list("pos").alias("_ps"))
-    )
+    ONE gram-keyed exchange with a whole-partition count window.  A gram's
+    raw occurrence rows buffer on one window task, so a single document
+    repeating one gram thousands of times is that task's straggler.  A
+    (gram, doc) pre-aggregate cannot remove it — the per-doc islands
+    window downstream sees the same duplicated positions whatever shape
+    counts them — and measured +4…+29% slower on healthy corpora
+    (VERDICT.md).  The planted boilerplate footer soaks linearly through
+    this shape at 16× and 32× (docs/SCALE_SOAK.md)."""
     return (
-        pg.withColumn("_cnt", F.sum("_c").over(wg))
+        g.withColumn("_cnt", F.count(F.lit(1)).over(Window.partitionBy("gram")))
         .filter(F.col("_cnt") > 1)
-        .select("doc_id", F.explode("_ps").alias("pos"))
         .select("doc_id", F.col("pos").cast("bigint").alias("pos"))
     )
 
 
+def _span_profile(
+    d: DataFrame, ids: DataFrame, k: int, span_col: str, mass_col: str
+) -> DataFrame:
+    """(doc_id, n_spans, ``span_col``, ``mass_col``) for every doc in
+    ``ids``: consecutive duplicated positions of ``d`` merge into maximal
+    spans (gaps-and-islands window per doc, never global; span length =
+    run + k - 1), aggregated per doc and left-joined back so docs without
+    a duplicated position report zeros."""
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    spans = (
+        d.withColumn("grp", F.col("pos") - F.row_number().over(w))
+        .groupBy("doc_id", "grp")
+        .agg(F.count(F.lit(1)).alias("run_len"))
+    )
+    agg = spans.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_spans"),
+        (F.max("run_len") + F.lit(k - 1)).cast("bigint").alias(span_col),
+        F.sum("run_len").cast("bigint").alias(mass_col),
+    )
+    return ids.join(agg, "doc_id", "left").select(
+        "doc_id",
+        *(
+            F.coalesce(c, F.lit(0)).cast("bigint").alias(c)
+            for c in ("n_spans", span_col, mass_col)
+        ),
+    )
+
+
 def _kept_posting_lists(
-    g: DataFrame,
-    df_cap: int,
-    occ_cap: int,
-    stats: dict | None,
-    pre_aggregate: bool,
+    g: DataFrame, df_cap: int, occ_cap: int, stats: dict | None
 ) -> DataFrame:
     """(gram, _l: array<struct<doc_id, pos>>) — the double-capped kept
     posting lists both crossdoc span tiers generate pairs from, over ONE
-    gram-keyed exchange (r14).
-
-    Default shape: df/occ caps as whole-partition windows over the raw
-    position rows (_df exactly, via a sorted first-row-of-doc flag —
+    gram-keyed exchange: df/occ caps as whole-partition windows over the
+    raw position rows (_df exactly, via a sorted first-row-of-doc flag —
     count_distinct is not window-supported), postings collected per gram.
-
-    ``pre_aggregate=True`` is the r15 mega-gram hatch (same argument and
-    guard as :func:`dup_positions`): positions pack into one row per
-    (gram, doc) ahead of the cap windows — _df becomes a plain row count,
-    the lag flag disappears, window buffers are bounded by document
-    frequency — at a measured +4/+7% on healthy corpora at sf0.1, so the
-    fast shape stays the default.  Per-gram flags and the kept posting
-    multiset are identical either way (caps drop boilerplate mega-grams
-    before any collect in BOTH shapes)."""
+    The caps drop boilerplate mega-grams before any collect, so a kept
+    list holds at most occ_cap entries."""
     wg = Window.partitionBy("gram")
-    if pre_aggregate:
-        pg = (
-            g.repartition(F.col("gram"))
-            .groupBy("gram", "doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("_c"),
-                F.collect_list("pos").alias("_ps"),
-            )
-            .withColumn("_df", F.count(F.lit(1)).over(wg))
-            .withColumn("_occ", F.sum("_c").over(wg))
-        )
-        if stats is not None:
-            stats["stop_grams"] = (
-                pg.filter((F.col("_df") > df_cap) | (F.col("_occ") > occ_cap))
-                .select("gram")
-                .distinct()
-                .count()
-            )
-        kept = pg.filter(
-            (F.col("_df") >= 2)
-            & (F.col("_df") <= df_cap)
-            & (F.col("_occ") <= occ_cap)
-        )
-        return kept.groupBy("gram").agg(
-            F.flatten(
-                F.collect_list(
-                    F.transform(
-                        "_ps",
-                        lambda p: F.struct(
-                            F.col("doc_id").alias("doc_id"), p.alias("pos")
-                        ),
-                    )
-                )
-            ).alias("_l")
-        )
     wgo = Window.partitionBy("gram").orderBy("doc_id", "pos")
     prev_doc = F.lag("doc_id").over(wgo)
     annotated = (
@@ -1173,51 +1152,16 @@ def _kept_posting_lists(
     )
 
 
-def crossdoc_spans(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 6,
-    df_cap: int = 10,
-    occ_cap: int = 50,
-    min_span: int = 8,
-    stats: dict | None = None,
-    gram_doc_preagg: bool = False,
+def _diagonal_spans(
+    lists: DataFrame, k: int, min_span: int, len_col: str
 ) -> DataFrame:
-    """(doc_a, doc_b, start_a, start_b, span_tokens, passage): every
-    MAXIMAL token span of >= ``min_span`` tokens shared verbatim between
-    two DISTINCT documents — the pairwise, positional form of
-    exact-substring training-data dedup (Lee et al. 2022,
-    arXiv:2107.06499), via the diagonal trick instead of a suffix array:
-    a k-gram match at (pos_a, pos_b) lies on diagonal pos_a - pos_b, and
-    consecutive matches on one (doc_a, doc_b, diagonal) are exactly the
-    gram-level run of one shared substring, so a gaps-and-islands window
-    per diagonal recovers each maximal span (length = run + k - 1).
-
-    Distinct from ``dedup_repeated_spans`` (per-DOC duplicated-position
-    mass, no pairing) and the containment family (set-based, no
-    positions): this op names WHICH pair shares WHAT passage at WHICH
-    offsets — the audit/excision record.
-
-    Scale: the only corpus-sized stages are the posexplode and one
-    gram-count shuffle.  The posting join is double-capped — a gram
-    enters the pair stage only with document frequency in [2, df_cap]
-    AND total occurrences <= occ_cap — the same stop-gram policy as the
-    containment index (boilerplate grams shared by thousands of docs are
-    dropped and COUNTED, not joined; at the soak tier the planted footer
-    trips this cap).  Pair points shuffle as ids+ints keyed
-    (doc_a, doc_b, diag); the islands window is per-diagonal, never
-    global.  The passage text joins back onto the bounded SPAN set, not
-    the point set."""
-    g = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(shingles_col(F.col(text_col), k=k)).alias("pos", "gram"),
-    )
-    # r14 optimization — df/occ caps + posting collection over ONE
-    # gram-keyed exchange, pair generation IN PLACE from each gram's
-    # occ_cap-bounded kept posting list; r15 adds the guarded (gram, doc)
-    # pre-aggregate mega-gram hatch.  Full rationale: _kept_posting_lists.
-    lists = _kept_posting_lists(g, df_cap, occ_cap, stats, gram_doc_preagg)
+    """(doc_a, doc_b, start_a, start_b, ``len_col``): maximal shared runs
+    of at least ``min_span`` from the kept posting lists.  Pairs are
+    generated IN PLACE from each gram's occ_cap-bounded list (no posting
+    self-join); a match at (pos_a, pos_b) lies on diagonal pos_a - pos_b,
+    and a gaps-and-islands window per (doc_a, doc_b, diagonal) — never
+    global — recovers each maximal span (length = run + k - 1).  Pair
+    points shuffle as ids+ints."""
     pairs = lists.select(
         F.explode(
             F.expr(
@@ -1236,17 +1180,76 @@ def crossdoc_spans(
         (F.col("_p.pos_a") - F.col("_p.pos_b")).alias("diag"),
     )
     w = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")
-    spans = (
+    return (
         pts.withColumn("grp", F.col("pos_a") - F.row_number().over(w))
         .groupBy("doc_a", "doc_b", "diag", "grp")
         .agg(
             F.min("pos_a").cast("bigint").alias("start_a"),
             F.min("pos_b").cast("bigint").alias("start_b"),
-            (F.count(F.lit(1)) + F.lit(k - 1)).cast("bigint").alias("span_tokens"),
+            (F.count(F.lit(1)) + F.lit(k - 1)).cast("bigint").alias(len_col),
         )
-        .filter(F.col("span_tokens") >= min_span)
-        .select("doc_a", "doc_b", "start_a", "start_b", "span_tokens")
+        .filter(F.col(len_col) >= min_span)
+        .select("doc_a", "doc_b", "start_a", "start_b", len_col)
     )
+
+
+def repeated_spans(docs: DataFrame, k: int = 5) -> DataFrame:
+    """(doc_id, n_spans, max_span_tokens, dup_positions): per-document
+    maximal TOKEN-level repeated spans of ``docs(doc_id, text)`` — the
+    positional core of exact-substring training-data dedup at k-gram
+    granularity instead of a distributed suffix array.  A position is
+    duplicated when its normalized token k-gram occurs more than once in
+    the corpus (including within the same doc); consecutive duplicated
+    positions merge into one span.  Reports span count, longest span in
+    tokens and duplicated-position mass — what an excision pass deletes.
+
+    Scale: one posexplode (positions ∝ corpus tokens), one gram-keyed
+    exchange (:func:`dup_positions`) and a per-doc islands window."""
+    g = docs.select(
+        "doc_id",
+        F.posexplode(shingles_col(F.col("text"), k=k)).alias("pos", "gram"),
+    )
+    return _span_profile(
+        dup_positions(g), docs.select("doc_id"), k,
+        "max_span_tokens", "dup_positions",
+    )
+
+
+def crossdoc_spans(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 6,
+    df_cap: int = 10,
+    occ_cap: int = 50,
+    min_span: int = 8,
+    stats: dict | None = None,
+) -> DataFrame:
+    """(doc_a, doc_b, start_a, start_b, span_tokens, passage): every
+    MAXIMAL token span of >= ``min_span`` tokens shared verbatim between
+    two DISTINCT documents — the pairwise, positional form of
+    exact-substring training-data dedup, via the diagonal trick
+    (:func:`_diagonal_spans`) instead of a suffix array.
+
+    Distinct from ``repeated_spans`` (per-DOC duplicated-position mass, no
+    pairing) and the containment family (set-based, no positions): this op
+    names WHICH pair shares WHAT passage at WHICH offsets — the
+    audit/excision record.
+
+    Scale: the only corpus-sized stages are the posexplode and one
+    gram-keyed exchange.  The posting lists are double-capped — a gram
+    enters the pair stage only with document frequency in [2, df_cap]
+    AND total occurrences <= occ_cap — the same stop-gram policy as the
+    containment index (boilerplate grams shared by thousands of docs are
+    dropped and COUNTED into ``stats["stop_grams"]``, not paired; at the
+    soak tier the planted footer trips this cap).  The passage text joins
+    back onto the bounded SPAN set, not the point set."""
+    g = docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.posexplode(shingles_col(F.col(text_col), k=k)).alias("pos", "gram"),
+    )
+    lists = _kept_posting_lists(g, df_cap, occ_cap, stats)
+    spans = _diagonal_spans(lists, k, min_span, "span_tokens")
     toks = tokens_col(F.col(text_col))
     src = docs.select(F.col(id_col).alias("doc_a"), toks.alias("_toks"))
     return spans.join(src, "doc_a").select(
@@ -1263,19 +1266,17 @@ def char_repeated_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 20,
-    gram_doc_preagg: bool = False,
 ) -> DataFrame:
     """(doc_id, n_spans, max_span_chars, dup_char_positions): per-document
     maximal CHARACTER-level repeated spans — the sub-token tier of
-    exact-substring training-data dedup (Lee et al. 2022, arXiv:2107.06499,
-    which operates on raw bytes with a suffix array).  A char position p is
-    duplicated when the k-char window text[p : p+k] occurs more than once
-    in the corpus (including elsewhere in the same doc); consecutive
-    duplicated positions merge into one span (gaps-and-islands per doc,
-    span length = run + k - 1).
+    exact-substring training-data dedup (Lee et al. operate on raw bytes
+    with a suffix array).  A char position p is duplicated when the k-char
+    window text[p : p+k] occurs more than once in the corpus (including
+    elsewhere in the same doc); consecutive duplicated positions merge
+    into one span (span length = run + k - 1).
 
     Why below token granularity: token-5-gram shingling
-    (``dedup_repeated_spans``) needs FIVE consecutive shared tokens, so it
+    (:func:`repeated_spans`) needs FIVE consecutive shared tokens, so it
     provably misses byte-identical spans that straddle token boundaries —
     a shared 40-char passage whose first and last tokens are glued to
     per-doc unique text contributes at most 4-gram-level token evidence
@@ -1287,57 +1288,18 @@ def char_repeated_spans(
     byte-exact duplication, where case/whitespace folding would manufacture
     false spans.
 
-    Scale: windows are enumerated by exploding a position sequence and
-    substring-ing from the carried text (no len*k gram array is ever
-    materialized per doc); the only corpus-sized shuffles are one
-    gram-count (map-side partial agg) and one join back on gram; the
-    islands window is per-doc, never global.  The shuffled gram key is the
-    raw k-char string (k bytes) — exact and oracle-parity-checkable; a
-    100 TB deployment would shuffle xxhash64(gram) instead (8 bytes, FP
-    probability n²/2⁶⁴) or build per-shard suffix arrays, both documented
-    trade-offs of this exact formulation, not fixes to it."""
+    Scale: windows come from :func:`_char_grams` (no per-doc gram array);
+    the only corpus-sized exchange is the gram-keyed one in
+    :func:`dup_positions`; the islands window is per-doc, never global.
+    The shuffled gram key is the raw k-char string (k bytes) — exact and
+    oracle-parity-checkable; a 100 TB deployment would shuffle
+    xxhash64(gram) instead (8 bytes, FP probability n²/2⁶⁴) or build
+    per-shard suffix arrays, both documented trade-offs of this exact
+    formulation, not fixes to it."""
     base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
-    g = (
-        base.filter(F.length("_t") >= k)
-        .select(
-            "doc_id",
-            "_t",
-            F.explode(
-                F.sequence(F.lit(0), F.length("_t") - F.lit(k))
-            ).alias("pos"),
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.substring(F.col("_t"), F.col("pos") + 1, k).alias("gram"),
-        )
-    )
-    # Duplicated positions via ONE gram-keyed exchange (r14); the r15
-    # (gram, doc) pre-aggregate mega-gram hatch is guarded — see
-    # dup_positions for the shape and the measured guard rationale.
-    d = dup_positions(g, pre_aggregate=gram_doc_preagg)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    spans = (
-        d.withColumn("grp", F.col("pos") - F.row_number().over(w))
-        .groupBy("doc_id", "grp")
-        .agg(F.count(F.lit(1)).alias("run_len"))
-    )
-    agg = spans.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_spans"),
-        (F.max("run_len") + F.lit(k - 1)).cast("bigint").alias("max_span_chars"),
-        F.sum("run_len").cast("bigint").alias("dup_char_positions"),
-    )
-    return (
-        base.select("doc_id")
-        .join(agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_spans", F.lit(0)).cast("bigint").alias("n_spans"),
-            F.coalesce("max_span_chars", F.lit(0)).cast("bigint")
-            .alias("max_span_chars"),
-            F.coalesce("dup_char_positions", F.lit(0)).cast("bigint")
-            .alias("dup_char_positions"),
-        )
+    d = dup_positions(_char_grams(base, k))
+    return _span_profile(
+        d, base.select("doc_id"), k, "max_span_chars", "dup_char_positions"
     )
 
 
@@ -1349,79 +1311,23 @@ def char_crossdoc_spans(
     df_cap: int = 10,
     occ_cap: int = 50,
     min_span: int = 24,
-    gram_doc_preagg: bool = False,
 ) -> DataFrame:
     """(doc_a, doc_b, start_a, start_b, span_chars, passage): every maximal
     CHARACTER span of >= ``min_span`` chars shared verbatim between two
-    distinct documents — the pairwise char tier of exact-substring dedup
-    (Lee et al. 2022, arXiv:2107.06499), completing the family symmetric
-    to the token tier (``char_repeated_spans`` ↔ per-doc mass,
-    ``crossdoc_spans`` ↔ token-gram pairs): the diagonal trick on k-char
-    window matches — a match at (pos_a, pos_b) lies on diagonal
-    pos_a - pos_b, and consecutive matches on one (pair, diagonal) are
-    exactly one shared substring, recovered maximally by a
-    gaps-and-islands window per diagonal (length = run + k - 1).
-    Raw text, no normalization (byte-exact contract).
+    distinct documents — the pairwise char tier, completing the family
+    square (per-doc ↔ pairwise × token ↔ char): the diagonal trick
+    (:func:`_diagonal_spans`) on k-char window matches of RAW text, no
+    normalization (byte-exact contract).
 
-    Scale: same double-cap stop-gram policy as the token version — a
-    window joins only with corpus document frequency in [2, df_cap] AND
-    total occurrences <= occ_cap, so boilerplate char runs are dropped,
-    never posting-joined; pair points shuffle as ids+ints keyed
-    (doc_a, doc_b, diag); the islands window is per-diagonal; passage
-    text joins onto the bounded SPAN set only."""
+    Scale: same double-cap stop-gram policy and single gram-keyed
+    exchange as :func:`crossdoc_spans` (measured 9.6 s → 2.8 s at sf0.1
+    against the posting self-join it replaced, rows identical) — a window
+    joins only with corpus document frequency in [2, df_cap] AND total
+    occurrences <= occ_cap, so boilerplate char runs are dropped, never
+    paired; passage text joins onto the bounded SPAN set only."""
     base = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("_t"))
-    g = (
-        base.filter(F.length("_t") >= k)
-        .select(
-            "doc_id",
-            "_t",
-            F.explode(
-                F.sequence(F.lit(0), F.length("_t") - F.lit(k))
-            ).alias("pos"),
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.substring(F.col("_t"), F.col("pos") + 1, k).alias("gram"),
-        )
-    )
-    # r14 optimization — ONE gram-keyed exchange end-to-end for candidate
-    # generation (measured 9.6 s → 2.8 s at sf0.1, rows identical): df/occ
-    # caps as whole-partition windows over the single gram exchange, pair
-    # set generated IN PLACE from each gram's kept posting list (bounded
-    # <= occ_cap before collect — same fan-out bound the old self-join
-    # had).  r15 adds the guarded (gram, doc) pre-aggregate mega-gram
-    # hatch.  Full rationale: _kept_posting_lists.
-    lists = _kept_posting_lists(g, df_cap, occ_cap, None, gram_doc_preagg)
-    pairs = lists.select(
-        F.explode(
-            F.expr(
-                "filter(flatten(transform(_l, x -> transform(_l, y -> "
-                "CASE WHEN x.doc_id < y.doc_id THEN named_struct("
-                "'doc_a', x.doc_id, 'doc_b', y.doc_id, "
-                "'pos_a', x.pos, 'pos_b', y.pos) END))), p -> p IS NOT NULL)"
-            )
-        ).alias("_p")
-    )
-    pts = pairs.select(
-        F.col("_p.doc_a").alias("doc_a"),
-        F.col("_p.doc_b").alias("doc_b"),
-        F.col("_p.pos_a").alias("pos_a"),
-        F.col("_p.pos_b").alias("pos_b"),
-        (F.col("_p.pos_a") - F.col("_p.pos_b")).alias("diag"),
-    )
-    w = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")
-    spans = (
-        pts.withColumn("grp", F.col("pos_a") - F.row_number().over(w))
-        .groupBy("doc_a", "doc_b", "diag", "grp")
-        .agg(
-            F.min("pos_a").cast("bigint").alias("start_a"),
-            F.min("pos_b").cast("bigint").alias("start_b"),
-            (F.count(F.lit(1)) + F.lit(k - 1)).cast("bigint").alias("span_chars"),
-        )
-        .filter(F.col("span_chars") >= min_span)
-        .select("doc_a", "doc_b", "start_a", "start_b", "span_chars")
-    )
+    lists = _kept_posting_lists(_char_grams(base, k), df_cap, occ_cap, None)
+    spans = _diagonal_spans(lists, k, min_span, "span_chars")
     src = base.select(F.col("doc_id").alias("doc_a"), F.col("_t"))
     return spans.join(src, "doc_a").select(
         "doc_a", "doc_b", "start_a", "start_b", "span_chars",

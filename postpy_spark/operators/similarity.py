@@ -419,7 +419,6 @@ def ivf_build(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
-    arrow: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Build an IVF index: (centroids, assignments).
 
@@ -433,17 +432,17 @@ def ivf_build(
     ``tests/test_plan_shapes.py``).  ``cell_id`` is the seed vector's own id,
     so no ranking step exists at all.
 
-    Each corpus vector is assigned to its max-cosine centroid via a
-    broadcast argmax.  Returns (centroids(cell_id, cv), corpus+cell_id).
-    At 100 TB the assignment is the only other full-corpus pass and it is a
-    narrow broadcast map — no shuffle.
+    Each corpus vector is assigned to its max-cosine centroid by the Arrow
+    argmax of :func:`_assign`.  Returns (centroids(cell_id, cv),
+    corpus+cell_id).  At 100 TB the assignment is the only other
+    full-corpus pass and it is a narrow map — no shuffle.
     """
     centroids = (
         corpus.select(F.col(id_col).alias("cell_id"), F.col(vec_col).alias("cv"))
         .orderBy(F.xxhash64(F.col("cell_id"), F.lit(seed)))
         .limit(n_cells)
     )
-    return centroids, _assign(corpus, centroids, id_col, vec_col, arrow=arrow)
+    return centroids, _assign(corpus, centroids, id_col, vec_col)
 
 
 def ivf_refine(
@@ -452,16 +451,15 @@ def ivf_refine(
     n_iter: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Lloyd refinement of an IVF coarse quantizer: new centroid = mean of
     the vectors assigned to the cell, then reassign.  All distributed:
     posexplode → per-(cell, dim) partial-aggregated mean → reassemble the
     mean vector with a sorted collect over the (n_cells × dim) frame —
-    never over corpus rows.  Each iteration is one corpus pass (broadcast
+    never over corpus rows.  Each iteration is one corpus pass (Arrow
     argmax) plus one dimension-wise aggregate; k-means's monotone inertia
     descent applies.  Returns (centroids, assignments)."""
-    assigned = _assign(corpus, centroids, id_col, vec_col, arrow=arrow)
+    assigned = _assign(corpus, centroids, id_col, vec_col)
     for _ in range(n_iter):
         dims = assigned.select("cell_id", F.posexplode(F.col(vec_col)))
         means = dims.groupBy("cell_id", "pos").agg(F.avg("col").alias("m"))
@@ -475,14 +473,12 @@ def ivf_refine(
         # re-derives every earlier assignment pass (each a full-corpus
         # argmax) once per downstream consumer, so k refine iterations
         # cost O(k^2) corpus scans instead of O(k) (measured:
-        # refine_iters=2 ivf_topk 5.0s -> ~2.5s at sf0.1).  LAZY on the
-        # r14 Arrow-assignment path: _assign's unit-centroid collect is
-        # the materializing action, so each iteration is ONE job (the
-        # eager form spent a separate checkpoint job per iteration on the
-        # same n_cells x d frame).  The JVM path has no such collect, so
-        # it keeps the eager checkpoint.
-        centroids = centroids.localCheckpoint(eager=not arrow)
-        assigned = _assign(corpus, centroids, id_col, vec_col, arrow=arrow)
+        # refine_iters=2 ivf_topk 5.0s -> ~2.5s at sf0.1).  LAZY: _assign's
+        # unit-centroid collect is the materializing action, so each
+        # iteration is ONE job (an eager checkpoint would spend a separate
+        # job per iteration on the same n_cells x d frame).
+        centroids = centroids.localCheckpoint(eager=False)
+        assigned = _assign(corpus, centroids, id_col, vec_col)
     return centroids, assigned
 
 
@@ -547,23 +543,10 @@ def _assign(
     centroids: DataFrame,
     id_col: str,
     vec_col: str,
-    arrow: bool = True,
 ) -> DataFrame:
     """Max-cosine argmax of each corpus vector over the centroids, as ONE
-    Arrow batch pass (r14 optimization round 3, guide §4.2/§2.4).
-
-    ``arrow=False`` keeps the previous all-JVM shape — a broadcast
-    crossJoin of unit centroids scored with the interpreted ``dot_expr``
-    fold, argmaxed by a partial-aggregating ``max_by(cell_id,
-    struct(_sim, -cell_id))`` (the r12 fix that replaced the row_number
-    window; shuffle volume |corpus| rows).  Kept for MULTI-CONSUMER
-    pipelines (semantic_dedup): its final query references the assignment
-    from several branches plus broadcast-build jobs, and each branch
-    re-entering a Python stage (plus the collect/sequencing jobs the
-    Arrow path needs) measured +22–88% there, while the single-consumer
-    IVF/PQ/kmeans paths measured −6/−18/−33% with Arrow.  Outputs are
-    bit-identical either way (pinned by
-    tests/test_llm_ops.py::test_arrow_assignment_identical_to_maxby).
+    Arrow batch pass — the only assignment shape, used by every IVF, PQ,
+    k-means and semantic-dedup caller.
 
     Scored as a plain dot against UNIT centroids: argmax_c cos(v, c) =
     argmax_c dot(v, ĉ) because |v| is constant across the candidate cells.
@@ -572,34 +555,15 @@ def _assign(
     same class as the PQ codebooks / bloom bitmap / kmeans seeds), then
     shipped to the worker as a closure; dots are dimension-order left
     folds, so similarities — and the strictly-greater/ascending-cell
-    argmax tie-break — are bit-identical to the previous
-    BNLJ + ``max_by(cell_id, struct(_sim, -cell_id))`` shape (pinned by
+    argmax tie-break — are bit-identical to the all-JVM reference shape,
+    a broadcast crossJoin argmaxed by ``max_by(cell_id, struct(_sim,
+    -cell_id))`` (rebuilt inline and pinned by
     tests/test_llm_ops.py::test_arrow_assignment_identical_to_maxby).
 
-    Scale: the old shape shuffled |corpus| rows through the max_by
-    aggregate per assignment pass (the r12 fix that replaced the
-    row_number window); the worker form is a NARROW passthrough — no
-    exchange at all, and n_cells no longer multiplies per-row fold cost
-    through the interpreted HOF evaluator."""
-    if not arrow:
-        cn = centroids.select("cell_id", unit_col(F.col("cv")).alias("_ucv"))
-        scored = corpus.crossJoin(broadcast(cn)).select(
-            F.col(id_col),
-            F.col(vec_col),
-            "cell_id",
-            dot_expr(F.col(vec_col), F.col("_ucv")).alias("_sim"),
-        )
-        return (
-            scored.groupBy(id_col)
-            .agg(
-                F.first(vec_col).alias(vec_col),
-                F.max_by(
-                    "cell_id",
-                    F.struct(F.col("_sim"), (-F.col("cell_id")).alias("_nc")),
-                ).alias("cell_id"),
-            )
-            .select(id_col, vec_col, "cell_id")
-        )
+    Scale: that reference shuffles |corpus| rows through the max_by
+    aggregate per assignment pass; the worker form is a NARROW
+    passthrough — no exchange at all, and n_cells does not multiply
+    per-row fold cost through the interpreted HOF evaluator."""
     cells = [
         (int(r["cell_id"]), [float(x) for x in r["_ucv"]])
         for r in centroids.select(
@@ -714,12 +678,10 @@ def semantic_dedup(
         # planted-dense-cluster pathology.  16 floor keeps tiny corpora on
         # the historical golden-fixture path.
         n_cells = max(16, min(4096, corpus.count() // 512))
-    centroids, assigned = ivf_build(
-        corpus, n_cells, id_col, vec_col, seed, arrow=True
-    )
+    centroids, assigned = ivf_build(corpus, n_cells, id_col, vec_col, seed)
     if refine_iters:
         centroids, assigned = ivf_refine(
-            corpus, centroids, refine_iters, id_col, vec_col, arrow=True
+            corpus, centroids, refine_iters, id_col, vec_col
         )
     # The narrow Arrow worker inherits the SCAN's partitioning (often one
     # file = one task at bench scale), which in r14 collapsed the

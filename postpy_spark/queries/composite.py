@@ -2021,21 +2021,21 @@ def ts_interpolate_linear_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid FIRST — spans aggregate → hour explode → (user, hour) hash join
     of the grid against the observations → TWO whole-grid window passes
     (ascending + descending running frames) to find each grid row's
-    neighbours.  But every gap hour's neighbours are just its bracketing
-    CONSECUTIVE observed anchors, so one ``lead()`` window over the
-    OBSERVED rows carries all four neighbour values, and the dense grid is
-    generated ON the anchor pair with the interpolation computed in place.
-    The dense grid — the largest frame in the query, span-sized not
-    event-sized — now flows through a narrow explode+project only: never
-    a join, never a window, never an exchange.  Plan: 6 Exchanges / 3
-    window sorts / 1 join → 3 Exchanges / 1 window sort / 0 joins
-    (plans/r15/ts_interpolate_linear_*.txt); the spans aggregate and grid
-    join disappear.  Rows identical: the fixed-point lerp arithmetic is
-    byte-for-byte the same expression over the same (pv, nv, peh, neh)
-    values, observed hours output their own ``v``, and the old edge-clamp
-    branches were provably dead (the grid spans [min(h), max(h)], so a
-    running last/first over it never saw an all-null prefix/suffix —
-    every grid row has both neighbours).
+    neighbours.  But every gap hour's neighbours are just the nearest
+    observed hours around its bracketing CONSECUTIVE hour rows, so one
+    window over the per-hour rows carries all four neighbour values, and
+    the dense grid is generated ON each consecutive pair with the
+    interpolation computed in place.  The dense grid — the largest frame
+    in the query, span-sized not event-sized — flows through a narrow
+    explode+project only: never a join, never a window, never an
+    exchange.  Plan: 6 Exchanges / 3 window sorts / 1 join → 3 Exchanges
+    / 1 window sort / 0 joins (plans/r15/ts_interpolate_linear_*.txt).
+
+    An hour whose ``SUM(value)`` is NULL (every event NULL) is a grid row
+    but a GAP, as in the oracle: the previous neighbour is an ignore-nulls
+    running ``last`` and the next one a ``lead ... IGNORE NULLS`` over the
+    same window (one sort), and the edge clamps fire for a user's leading
+    or trailing NULL hours; a user with no non-null hour gets NULLs.
 
     The interpolation runs in 1e-4 FIXED POINT (4dp neighbour values ×
     exact integer hour weights, round-half-up integer divide) — a float
@@ -2047,13 +2047,22 @@ def ts_interpolate_linear_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ph = e.groupBy("user_id", "h").agg(F.round(F.sum("value"), 4).alias("v"))
     anchor = F.lit("1990-01-01 00:00:00").cast("timestamp_ntz")
     w = Window.partitionBy("user_id").orderBy("h")
-    nxt = ph.select(
+    # an hour whose SUM(value) is NULL is a grid row but not an observation:
+    # neighbours come from the nearest NON-NULL anchors on either side
+    # (ignore-nulls running last / lead over the same window, so one sort).
+    running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    nxt = ph.withColumn(
+        "oeh",
+        F.when(
+            F.col("v").isNotNull(), F.timestamp_diff("HOUR", anchor, F.col("h"))
+        ),
+    ).select(
         "user_id",
         "h",
-        "v",
-        F.timestamp_diff("HOUR", anchor, F.col("h")).alias("peh"),
-        F.lead("v").over(w).alias("nv"),
-        F.lead(F.timestamp_diff("HOUR", anchor, F.col("h"))).over(w).alias("neh"),
+        F.last("v", ignorenulls=True).over(running).alias("pv"),
+        F.last("oeh", ignorenulls=True).over(running).alias("peh"),
+        F.expr("lead(v) IGNORE NULLS").over(w).alias("nv"),
+        F.expr("lead(oeh) IGNORE NULLS").over(w).alias("neh"),
         F.lead("h").over(w).alias("nh"),
     )
     # one grid row per hour in [h, nh): the anchor itself plus its gap
@@ -2061,7 +2070,7 @@ def ts_interpolate_linear_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # union over anchors is exactly the old sequence(min(h), max(h)) grid.
     g = nxt.select(
         "user_id",
-        "v",
+        "pv",
         "peh",
         "nv",
         "neh",
@@ -2075,20 +2084,25 @@ def ts_interpolate_linear_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("h"),
     ).withColumn("eh", F.timestamp_diff("HOUR", anchor, F.col("h")))
-    observed = F.col("eh") == F.col("peh")
+    # only a non-null anchor's own hour has eh == peh (null-safe: a user's
+    # leading NULL hours have no previous observation at all)
+    observed = F.col("eh").eqNullSafe(F.col("peh"))
     scaled = g.select(
         "user_id",
         "h",
         observed.alias("observed"),
-        "v",
+        "pv",
+        "nv",
         (
-            F.round(F.col("v") * 10000).cast("bigint") * (F.col("neh") - F.col("eh"))
+            F.round(F.col("pv") * 10000).cast("bigint") * (F.col("neh") - F.col("eh"))
             + F.round(F.col("nv") * 10000).cast("bigint") * (F.col("eh") - F.col("peh"))
         ).alias("num"),
         (F.col("neh") - F.col("peh")).alias("den"),
     )
-    interp = F.when(F.col("observed"), F.col("v")).otherwise(
-        F.expr("(2 * num + den) div (2 * den)").cast("double") / 10000
+    interp = (
+        F.when(F.col("observed") | F.col("nv").isNull(), F.col("pv"))
+        .when(F.col("pv").isNull(), F.col("nv"))
+        .otherwise(F.expr("(2 * num + den) div (2 * den)").cast("double") / 10000)
     )
     return scaled.select(
         "user_id", "h", interp.alias("v_interp"), "observed"

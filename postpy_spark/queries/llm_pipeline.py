@@ -1910,44 +1910,11 @@ def dedup_repeated_spans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (including within the same doc); consecutive duplicated positions merge
     into one span (gaps-and-islands window per doc).  Reports span count,
     longest span in tokens (run + k - 1), and duplicated-position mass —
-    what a span-excision pass would delete.
-
-    Scale: one explode (positions ∝ corpus tokens), one gram-count shuffle,
-    one join back, and a PER-DOC window (bounded by doc length, never
-    global).  text_ngram_dup_ratio gives the unpositioned fraction; this op
-    adds the contiguity structure."""
-    from pyspark.sql import Window
-
-    k = 5
-    docs = load_table(spark, sf_dir, "documents")
-    g = docs.select(
-        "doc_id",
-        F.posexplode(dedup.shingles_col(F.col("text"), k=k)).alias("pos", "gram"),
-    )
-    # duplicated positions via ONE gram-keyed exchange (r14), with the r15
-    # (gram, doc) pre-aggregate mega-gram hatch — operators/dedup.py::
-    # dup_positions has the full rationale.
-    d = dedup.dup_positions(g)
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    isl = d.withColumn("grp", F.col("pos") - F.row_number().over(w))
-    spans = isl.groupBy("doc_id", "grp").agg(F.count(F.lit(1)).alias("run_len"))
-    agg = spans.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_spans"),
-        (F.max("run_len") + F.lit(k - 1)).cast("bigint").alias("max_span_tokens"),
-        F.sum("run_len").cast("bigint").alias("dup_positions"),
-    )
-    return (
-        docs.select("doc_id")
-        .join(agg, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_spans", F.lit(0)).cast("bigint").alias("n_spans"),
-            F.coalesce("max_span_tokens", F.lit(0)).cast("bigint")
-            .alias("max_span_tokens"),
-            F.coalesce("dup_positions", F.lit(0)).cast("bigint")
-            .alias("dup_positions"),
-        )
-    )
+    what a span-excision pass would delete.  Plan and scale posture in
+    operators/dedup.py::repeated_spans (one gram-keyed exchange, per-doc
+    islands window); text_ngram_dup_ratio gives the unpositioned
+    fraction, this op adds the contiguity structure."""
+    return dedup.repeated_spans(load_table(spark, sf_dir, "documents"), k=5)
 
 
 @query(
@@ -2879,8 +2846,7 @@ def _excise_repeated_spans(docs: DataFrame, k: int = 5) -> DataFrame:
         "doc_id",
         F.posexplode(dedup.shingles_col(F.col("text"), k=k)).alias("pos", "gram"),
     )
-    # duplicated positions via ONE gram-keyed exchange (r14), with the r15
-    # (gram, doc) pre-aggregate mega-gram hatch (dedup.dup_positions).
+    # duplicated positions via ONE gram-keyed exchange (dedup.dup_positions)
     d = dedup.dup_positions(g)
     w = Window.partitionBy("doc_id").orderBy("pos")
     isl = d.withColumn("grp", F.col("pos") - F.row_number().over(w))

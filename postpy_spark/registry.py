@@ -85,32 +85,15 @@ CONTRACT_VARIANTS: tuple[str, ...] = (
     "join_anti_not_in", "fn_array_hof", "except_all_ab", "intersect_all_ab",
 )
 
-#: Driver-sample rotation (round 4).  The external driver hashes only the
-#: FIRST ~50 queries in iteration order each round, and rounds 2–3 sampled
-#: the identical prefix (groups A, B1–B3, and three B4 windows) — so 35
-#: contract ops (B4 tail, all of B5, C, D, E, plus ``fn_cast`` whose only
-#: driver row is the round-1 FAIL that was fixed in round 2) had never
-#: received a driver CORRECTNESS row, and 8 B6 ops' rows are round-1
-#: vintage.  Emitting these 43 first converts them to driver-attested
-#: without hiding anything: every op stays registered and the local oracle
-#: gate still checks all of them.  The approx pair (``agg_approx_*``) is
-#: deliberately NOT in the prefix — it can only ever produce ``no_oracle``
-#: rows, which would waste two sample slots.
+#: Driver-sample rotation.  The external driver hashes only the FIRST ~50
+#: queries in registry iteration order, so this tuple decides which ops get
+#: a driver CORRECTNESS row.  Rule: the least recently attested names go
+#: first (never-sampled ops, then the oldest latest-row vintages); every op
+#: stays registered and the local oracle gate still checks all of them.
+#: Rows-only ops spend a slot on a ``no_oracle`` row, so they lead only
+#: when their liveness (``spark_rows > 0``) itself needs re-attesting.
 DRIVER_SAMPLE_ROTATION: tuple[str, ...] = (
-    # -- round-14 rotation.  The driver samples the FIRST ~50 registry
-    # entries each round.  Cumulative attestation after r13: 364/365
-    # queries carry >=1 driver row, every latest row green; the single
-    # hole is sim_nndescent_refine (rows-only by design, never sampled)
-    # — it leads this round (r13 VERDICT task 1).  Next: the full
-    # rows-only liveness refresh (every rows-only op whose latest driver
-    # row predates r10 — the r3/r5/r7 probabilistic contract ops plus
-    # the r9-vintage sketch/sampler family), deliberately spending
-    # sample slots on no_oracle rows this once so `spark_rows > 0` is
-    # attested on CURRENT code for the whole rows-only population.
-    # Then the sql-checked staleness queue: the 11-query r6-vintage tail
-    # that fell off the end of r13's 50-slot window (streaming + UDF
-    # variants), then r7-vintage fill.
-    # (0) new in round 14
+    # (0) newest ops
     "dedup_char_spans", "dedup_char_spans_planted", "dedup_char_crossdoc",
     "text_unigram_train", "text_unigram_planted", "text_unigram_segment",
     "er_incremental", "er_incremental_planted",
@@ -124,7 +107,7 @@ DRIVER_SAMPLE_ROTATION: tuple[str, ...] = (
     "agg_approx_topk", "agg_cms_estimate", "agg_hll_mergeable",
     "agg_kll_quantiles", "agg_kmv_distinct", "agg_kmv_setops",
     "sample_mixture_stable", "sample_stratified", "sample_weighted",
-    # (3) r6-vintage sql tail (missed r13's window)
+    # (3) oldest sql-checked rows (r6 vintage)
     "stream_scd2_dimension", "stream_session_dynamic_gap",
     "stream_static_enrich", "stream_stream_join", "stream_two_level_agg",
     "udaf_pandas_window", "udf_scalar_pandas_iter", "udtf_cogroup_pandas",

@@ -1,6 +1,8 @@
 """Edge cases of the Arrow worker payloads, called directly on pyarrow
 data (no Spark): the kNN-graph bucket scorer against the pair-dot scorer
-it replaced, and the SimHash worker on a sliced batch."""
+it replaced, the SimHash worker on a sliced batch, and an empty / one-row
+/ sliced / null-vector harness shared by the LSH-signature, centroid-assign
+and pair-dot workers."""
 
 import math
 from decimal import ROUND_HALF_UP, Decimal
@@ -11,8 +13,10 @@ import pytest
 
 from postpy_spark.operators.dedup import _make_simhash_worker
 from postpy_spark.operators.similarity import (
+    _make_assign_worker,
     _make_bucket_topk_worker,
     _make_pair_dot_worker,
+    _make_signature_worker,
 )
 
 LIST_F64 = pa.list_(pa.float64())
@@ -214,3 +218,106 @@ def test_simhash_worker_sliced_batch_matches_unsliced():
         )
         (want,) = list(run(iter([fresh])))
         assert got.column("simhash").to_pylist() == want.column("simhash").to_pylist()
+
+
+# ---------------------------------------------------------------------------
+# Shared harness: mapInArrow workers fed one RecordBatch at a time
+# ---------------------------------------------------------------------------
+
+DIM = 6
+_PLANES = np.random.default_rng(5).standard_normal((8, DIM)).tolist()
+_CELLS = [
+    (cid, (v / np.linalg.norm(v)).tolist())
+    for cid, v in zip(
+        (2, 5, 9), np.random.default_rng(6).standard_normal((3, DIM))
+    )
+]
+
+
+def _vec_batch(vecs):
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(range(100, 100 + len(vecs)), type=pa.int64()),
+            pa.array(vecs, type=LIST_F64),
+        ],
+        ["vec_id", "v"],
+    )
+
+
+def _pair_batch(vecs):
+    n = len(vecs)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(range(n), type=pa.int64()),
+            pa.array(range(n, 2 * n), type=pa.int64()),
+            pa.array(vecs, type=LIST_F64),
+            pa.array(vecs[::-1], type=LIST_F64),
+        ],
+        ["src", "dst", "sv", "dv"],
+    )
+
+
+#: name → (worker factory, batch builder, output rows per input row)
+WORKERS = {
+    "signature": (lambda: _make_signature_worker(_PLANES, 2), _vec_batch, 2),
+    "assign": (lambda: _make_assign_worker(_CELLS), _vec_batch, 1),
+    "pair_dot": (_make_pair_dot_worker, _pair_batch, 1),
+}
+
+
+def _run(name, batch):
+    make, _, _ = WORKERS[name]
+    (out,) = list(make()(iter([batch])))
+    return out
+
+
+def _vecs(n, seed=0):
+    return np.random.default_rng(seed).standard_normal((n, DIM)).tolist()
+
+
+@pytest.mark.parametrize("name", sorted(WORKERS))
+def test_worker_empty_batch(name):
+    _, build, _ = WORKERS[name]
+    full = _run(name, build(_vecs(3)))
+    out = _run(name, build(_vecs(3)).slice(0, 0))
+    assert out.num_rows == 0
+    assert out.schema.names == full.schema.names
+    assert [f.type for f in out.schema] == [f.type for f in full.schema]
+
+
+@pytest.mark.parametrize("name", sorted(WORKERS))
+def test_worker_one_row_batch(name):
+    """A one-row batch scores that row exactly as it is scored inside a
+    larger batch (rows are independent)."""
+    _, build, per_row = WORKERS[name]
+    vecs = _vecs(5, seed=1)
+    full = _run(name, build(vecs))
+    for i in (0, 4):
+        got = _run(name, build(vecs).take(pa.array([i])))
+        assert got.num_rows == per_row
+        want = full.slice(i * per_row, per_row).to_pydict()
+        assert got.to_pydict() == want
+
+
+@pytest.mark.parametrize("name", sorted(WORKERS))
+@pytest.mark.parametrize("offset,length", [(1, 3), (4, 2), (6, 1)])
+def test_worker_sliced_batch_matches_unsliced(name, offset, length):
+    """A batch sliced at a nonzero offset (its list offsets point into the
+    parent's value buffer) must equal the unsliced result for those rows."""
+    _, build, per_row = WORKERS[name]
+    vecs = _vecs(7, seed=2)
+    batch = build(vecs)
+    got = _run(name, batch.slice(offset, length)).to_pydict()
+    full = _run(name, batch)
+    assert got == full.slice(offset * per_row, length * per_row).to_pydict()
+    fresh = _run(name, build(vecs).take(pa.array(range(offset, offset + length))))
+    assert got == fresh.to_pydict()
+
+
+@pytest.mark.parametrize("name", sorted(WORKERS))
+def test_worker_null_vector_raises(name):
+    _, build, _ = WORKERS[name]
+    vecs = _vecs(3, seed=3)
+    vecs[1] = None
+    with pytest.raises(ValueError, match="null vector"):
+        _run(name, build(vecs))

@@ -1470,27 +1470,41 @@ def test_knn_graph_block_scoring_identical_to_pair_shape(
     assert want.exceptAll(got).count() == 0
 
 
-def test_dup_positions_preagg_identical(spark):
-    """The guarded (gram, doc) pre-aggregate (r15 mega-gram hatch) must be
-    row-identical to the default window shape for BOTH the per-doc tier
-    (char_repeated_spans → dup_positions) and the pairwise tier
-    (crossdoc_spans → _kept_posting_lists), including on a planted
-    intra-doc mega-gram (one doc repeating a 20-char run ~2k times — the
-    straggler shape the hatch exists for)."""
+def test_span_family_mega_gram_matches_oracle(spark, tmp_path):
+    """The span family on a planted intra-doc mega-gram (one doc repeating
+    a 19-char run ~120 times, so each of its 20-char windows recurs ~120
+    times inside ONE document — the per-doc straggler shape) must equal
+    the registered DuckDB oracles exactly: the per-doc tier
+    (dedup_char_spans → dup_positions) and the pairwise tier
+    (dedup_crossdoc_spans → _kept_posting_lists), run as the registered
+    queries over the smoke documents plus the planted doc."""
+    import duckdb
+
+    from postpy_spark.registry import load_all
+    from postpy_spark.testing import compare_spark_duckdb
+
     d = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     mega = spark.createDataFrame(
         [(10**6, "boilerplate run xx " * 120 + "tail marker unique")],
         "doc_id bigint, text string",
     )
-    docs = d.unionByName(mega)
-    a = dedup.char_repeated_spans(docs, k=20)
-    b = dedup.char_repeated_spans(docs, k=20, gram_doc_preagg=True)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-    c = dedup.crossdoc_spans(docs, k=6)
-    e = dedup.crossdoc_spans(docs, k=6, gram_doc_preagg=True)
-    assert c.exceptAll(e).count() == 0
-    assert e.exceptAll(c).count() == 0
+    path = tmp_path / "documents.parquet"
+    d.unionByName(mega).write.parquet(str(path))
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/*.parquet')"
+    )
+    reg = load_all()
+    for name in ("dedup_char_spans", "dedup_crossdoc_spans"):
+        out = reg[name].fn(spark, str(tmp_path))
+        problems = compare_spark_duckdb(out, con, reg[name].oracle)
+        assert not problems, (name, problems)
+    mega_row = (
+        reg["dedup_char_spans"].fn(spark, str(tmp_path))
+        .filter(F.col("doc_id") == 10**6)
+        .first()
+    )
+    assert mega_row.dup_char_positions > 2000, mega_row
 
 
 def test_arrow_simhash_identical_to_jvm_agg(spark):

@@ -257,41 +257,69 @@ def test_ts_ewma_matches_python_fold(spark):
 def test_ts_interpolate_linear_edges(spark, tmp_path):
     """Handcrafted series: interior gap is the straight line between
     neighbours; leading/trailing gaps clamp to the nearest single
-    neighbour; observed hours pass through untouched."""
-    rows = []
-    base = 1704067200 * 1000 * 1000  # 2024-01-01 00:00 in micros
+    neighbour; observed hours pass through untouched.  An hour whose
+    SUM(value) is NULL is a gap, not an observation — at a user's first
+    hour, an interior hour, a user's last hour, and for a user with no
+    non-null hour at all — and must match the registered DuckDB oracle."""
+    import duckdb
 
-    def ev(eid, hour, value):
-        import datetime
+    from postpy_spark.registry import load_all
+    from postpy_spark.testing import compare_spark_duckdb
 
+    def ev(eid, user, hour, value):
         return (
             eid,
             datetime.datetime(2024, 1, 1) + datetime.timedelta(hours=hour),
-            7,
+            user,
             "view",
-            float(value),
+            None if value is None else float(value),
             "{}",
         )
 
-    # observed at h0 (10.0), h3 (40.0) → h1 = 20.0, h2 = 30.0 exactly
-    rows = [ev(1, 0, 10.0), ev(2, 3, 40.0)]
+    rows = [
+        # observed at h0 (10.0), h3 (40.0) → h1 = 20.0, h2 = 30.0 exactly
+        ev(1, 7, 0, 10.0), ev(2, 7, 3, 40.0),
+        # NULL first hour, NULL interior hour between observed h1 and h4
+        # (h4 also carries a NULL event: SUM skips it), NULL last hour
+        ev(3, 8, 0, None), ev(4, 8, 1, 10.0), ev(5, 8, 2, None),
+        ev(6, 8, 4, 50.0), ev(7, 8, 4, None), ev(8, 8, 6, None),
+        # every hour NULL
+        ev(9, 9, 0, None), ev(10, 9, 2, None),
+    ]
+    path = tmp_path / "events.parquet"
     spark.createDataFrame(
         rows,
         "event_id long, ts timestamp_ntz, user_id long, event_type string,"
         " value double, props string",
-    ).write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
-    from postpy_spark.registry import load_all
-
-    out = {
-        r.h.hour: (r.v_interp, r.observed)
-        for r in load_all()["ts_interpolate_linear"].fn(spark, str(tmp_path)).collect()
-    }
-    assert out == {
+    ).write.mode("overwrite").parquet(str(path))
+    q = load_all()["ts_interpolate_linear"]
+    df = q.fn(spark, str(tmp_path))
+    out = {(r.user_id, r.h.hour): (r.v_interp, r.observed) for r in df.collect()}
+    assert {h: v for (u, h), v in out.items() if u == 7} == {
         0: (10.0, True),
         1: (20.0, False),
         2: (30.0, False),
         3: (40.0, True),
     }
+    assert {h: v for (u, h), v in out.items() if u == 8} == {
+        0: (10.0, False),
+        1: (10.0, True),
+        2: (23.3333, False),
+        3: (36.6667, False),
+        4: (50.0, True),
+        5: (50.0, False),
+        6: (50.0, False),
+    }
+    assert {h: v for (u, h), v in out.items() if u == 9} == {
+        0: (None, False),
+        1: (None, False),
+        2: (None, False),
+    }
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{path}/*.parquet')"
+    )
+    assert not compare_spark_duckdb(df, con, q.oracle)
 
 
 def test_cms_contract_and_mergeability(spark):
